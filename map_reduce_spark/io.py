@@ -14,8 +14,11 @@ output committer makes every sink here idempotent by construction).
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,11 +49,58 @@ def _parquet_has_nanos(path: str) -> bool:
         return True
 
 
+# (app id, path, st_ino, st_mtime_ns, st_size, *_SCHEMA_CONFS values) ->
+# the schema Spark inferred for that file (see ``load_table``).
+# LRU-capped like ``_NPART_CACHE`` below.
+_SCHEMA_CACHE: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_CACHE_MAX = 64
+_SCHEMA_LOCK = threading.Lock()
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: let Spark resolve and infer it
+        return spark.read.parquet(path)
+    key = (
+        spark.sparkContext.applicationId,
+        path,
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.get(key)
+        if schema is not None:
+            _SCHEMA_CACHE.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        _SCHEMA_CACHE[key] = df.schema
+        while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the driver's parquet tables.
 
     Parquet scan → Catalyst gets column pruning + predicate pushdown for
     free on every downstream query.
+
+    The inferred schema is cached per session, keyed on the app id, the
+    path, the file's ``st_ino``/``st_mtime_ns``/``st_size`` and the two
+    confs that steer inference (``spark.sql.legacy.parquet.nanosAsLong``,
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``). A repeat read of an
+    unchanged file passes the cached schema and launches no
+    schema-inference job; a rewritten file, a changed conf or a new
+    session re-infers. A path ``os.stat`` cannot see is never cached.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -74,7 +124,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         if _parquet_has_nanos(path):
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet_cached(spark, path)
         # ts_us (raw epoch microseconds) travels alongside the NTZ
         # timestamp so event-time arithmetic can stay session-timezone-
         # independent. The file's ts precision varies by driver vintage
@@ -97,7 +147,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df.withColumn("ts_us", F.unix_micros("ts")).withColumn(
             "ts", F.expr(f"timestampadd(MICROSECOND, unix_micros(ts), {_EPOCH})")
         )
-    return spark.read.parquet(path)
+    return _read_parquet_cached(spark, path)
 
 
 # (app_id, plan semantic hash) -> input partition count; the probe
@@ -105,8 +155,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # distinct plan per session, not once per query build. LRU-capped: a
 # long-lived session building many distinct plans must not grow this
 # without bound (move-to-end on hit, evict oldest past the cap).
-from collections import OrderedDict
-
 _NPART_CACHE: OrderedDict[tuple[str, int], int] = OrderedDict()
 _NPART_CACHE_MAX = 256
 

@@ -1413,38 +1413,10 @@ def fuzzy_contaminated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     family start-to-finish, so bands, candidates, and verdicts are all
     reproduced by the DuckDB oracle.
     """
-    from map_reduce_spark.operators.dedup import (
-        BANDS,
-        NUM_PERM,
-        ROWS_PER_BAND,
-        _shingles,
-    )
+    from map_reduce_spark.operators.dedup import _portable_bands, _shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = parallelize_if_narrow(docs, "doc_id").select(
-        "doc_id", F.explode(_shingles()).alias("t")
-    )
-
-    def perm_hash(p: int):
-        return F.substring(F.md5(F.concat(F.lit(f"{p}:"), F.col("t"))), 1, 8)
-
-    mins = [F.min(perm_hash(p)).alias(f"h{p}") for p in range(NUM_PERM)]
-    per_doc = sh.groupBy("doc_id").agg(*mins)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(BANDS)
-    ]
-    bands = per_doc.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
+    bands = _portable_bands(docs)
     is_bench = F.col("doc_id") % FUZZY_BENCH_MOD == 0
     bench_bands = bands.filter(is_bench).select(
         F.col("doc_id").alias("bench_id"), "band", "bucket"

@@ -13,12 +13,41 @@ chosen to also hold on a 1000-executor cluster at ~100 TB:
 - ``spark.sql.shuffle.partitions`` defaults to local core count here;
   on a real cluster AQE's coalescing makes the static value mostly a
   ceiling, and we'd raise it to ~2-3× total cores.
+- ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_MAX_ENTRIES``
+  (Spark's default is 100). Compiled whole-stage-codegen classes live in
+  a Guava cache of 4 segments, each evicting on its own at a quarter of
+  the cap, so eviction starts before the cache is full. A working set
+  larger than that evicts each class before its next use, and every
+  warm pass recompiles it (19-25 ms a class). Cold-pass compile counts
+  (``CodegenMetrics``, local[4]): perfbench ``curation_mix`` 171,
+  ``lakehouse_rw`` 98, ``wordcount`` 20; bench.py's 92-query headline
+  pass at sf0.1 about 1580. Warm headline passes recompiled 2086
+  classes at 100 and 1375 at 1000; 4096 leaves room for per-segment
+  imbalance and recompiles 56.
+- Driver heap sizing is pinned so that identical runs end with the same
+  footprint. Left to itself G1 starts the heap at 1/64 of host memory,
+  shrinks it to about 110 MB after its first marking cycle, then grows
+  it in steps of up to a fifth of the uncommitted heap. It takes a step
+  whenever GC pauses cross a share of recent wall time (7.7 %), and
+  bursts of back-to-back young GCs cross it: with 1 MB regions every
+  array of 512 KB or more (broadcast blocks, task binaries, serialized
+  results) is a humongous allocation, and above the marking threshold
+  each one starts a young GC. The step count therefore follows timing:
+  identical perfbench ``curation_mix`` runs (1 GB heap, local[4]) ended
+  with a JVM peak RSS anywhere from 1010 to 1364 MB (16 runs). Two
+  settings remove the steps: the heap starts at ``DRIVER_HEAP_START_MB``
+  (``-Xms``, capped at the maximum), so it is never shrunk below what a
+  pass needs, and below 8 GB (where G1 would pick 1-2 MB) regions are
+  ``G1_REGION_MB`` = 4 MB, which halves the humongous-triggered GCs.
+  With both the heap stayed at 512 MB (JVM peak RSS 953-1027 MB, 15
+  runs); with ``-Xms`` alone 9 of 24 runs still grew it once.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import re
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -183,10 +212,39 @@ def _release(popped: list[tuple[object, object]], who: str) -> int:
 
 
 def _cpus() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    except ValueError:
-        return os.cpu_count() or 8
+    """Core count from ``SPARK_GRAFT_CPUS``; unset, empty or ``0`` means
+    the host's core count. Any other non-integer or a negative value
+    raises rather than silently sizing the session to the host."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "0"
+    if not raw.isdecimal():
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a non-negative integer, got {raw!r}")
+    return int(raw) or (os.cpu_count() or 8)
+
+
+# Compiled whole-stage-codegen classes per JVM (a static conf: it takes
+# effect only when the session's JVM starts). See the module docstring
+# for the working sets this covers.
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
+# Initial driver heap and the smallest G1 region size; see the module
+# docstring.
+DRIVER_HEAP_START_MB = 512
+G1_REGION_MB = 4
+
+_MEM_UNIT_MB = {"b": 1 / 2**20, "k": 1 / 1024, "m": 1, "g": 1024, "t": 2**20}
+
+
+def _driver_java_options(mem: str) -> str:
+    """Driver JVM heap options for a heap maximum of ``mem``, a Spark
+    memory string (``16g``, ``512m``, ``1024kb``; no unit means MB)."""
+    m = re.fullmatch(r"(\d+)\s*([kmgt]?)(b?)", mem.strip().lower())
+    if not m:
+        raise ValueError(f"SPARK_GRAFT_DRIVER_MEM must be a memory size such as 16g, got {mem!r}")
+    heap_mb = int(m.group(1)) * _MEM_UNIT_MB[m.group(2) or m.group(3) or "m"]
+    opts = f"-Xms{int(min(DRIVER_HEAP_START_MB, heap_mb))}m"
+    if heap_mb < 2048 * G1_REGION_MB:  # from here up G1 picks heap/2048 itself
+        opts += f" -XX:G1HeapRegionSize={G1_REGION_MB}m"
+    return opts
 
 
 def get_spark(app_name: str = "map_reduce_spark", cpus: int | None = None) -> SparkSession:
@@ -195,6 +253,7 @@ def get_spark(app_name: str = "map_reduce_spark", cpus: int | None = None) -> Sp
     Safe to call repeatedly — Spark returns the active session.
     """
     n = cpus or _cpus()
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -207,9 +266,12 @@ def get_spark(app_name: str = "map_reduce_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", mem)
+        # the admin-level slot, so a user's extraJavaOptions can override
+        .config("spark.driver.defaultJavaOptions", _driver_java_options(mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # managed-table location for bucketed tables (kept out of the
         # repo; on a cluster this is the metastore-governed warehouse)
         .config(
